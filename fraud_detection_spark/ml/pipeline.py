@@ -39,10 +39,12 @@ def detach(model: PipelineModel) -> PipelineModel:
     session, which FAILS whenever any Observation has been registered
     on it (Spark 4.1: ObservationManager's registry is not
     serializable once non-empty). Loaded models carry no summary, so
-    they are always closure-safe."""
-    path = tempfile.mkdtemp(prefix="fds-detach-") + "/m"
-    model.write().overwrite().save(path)
-    return PipelineModel.load(path)
+    they are always closure-safe. The copy is deleted once loaded: the
+    MLlib readers collect every stage's data to the driver at load."""
+    with tempfile.TemporaryDirectory(prefix="fds-detach-") as tmp:
+        path = tmp + "/m"
+        model.write().overwrite().save(path)
+        return PipelineModel.load(path)
 
 
 @dataclass

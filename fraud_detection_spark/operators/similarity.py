@@ -824,6 +824,8 @@ def _coarse_cell(e_expr: str = "e") -> Column:
     fingerprint and noop-exec wall pinned equal, measured interleaved)
     in ~9 commands / ~0.04 s. Double literals carry the D suffix.
     ``e_expr`` is the SQL expression of the double-array column."""
+    if not isinstance(e_expr, str):
+        raise TypeError(f"e_expr must be SQL text, got {type(e_expr).__name__}")
     bits = []
     for j in range(_IVFPQ_PLANES):
         arr = (

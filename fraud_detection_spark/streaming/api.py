@@ -24,9 +24,12 @@ background mean) and committing to an in-memory store standing in for
 the Postgres shap_explanations table. Swap the store for the JDBC sink
 (sources/jdbc.py) to persist.
 
-This facade is single-node glue by design — the distributed work
-(scoring, explanation math) stays in Spark; at production scale the
-same handlers sit behind any WSGI/ASGI front."""
+This facade is single-node glue by design. Per-request scoring and
+explanation are driver-side arithmetic on the detector's linear
+snapshot (ml/detector.py), one shared kernel and no Spark job per
+request; Spark stays the engine for batch scoring and batch SHAP
+(``predict_df``, the ``q_shap_linear`` query). At production scale
+the same handlers sit behind any WSGI/ASGI front."""
 
 from __future__ import annotations
 
@@ -36,9 +39,6 @@ import threading
 import time
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-from pyspark.ml.functions import vector_to_array
-from pyspark.sql import functions as F
 
 from fraud_detection_spark.ml.detector import FraudDetector
 
@@ -55,23 +55,8 @@ class ServingApp:
     # ------------------------------------------------------------- explain
     def _shap_linear(self, features: dict[str, float]) -> tuple[list[float], list[str]]:
         """φ = coef ⊙ x_scaled (xai_tasks.py:102-115's LinearExplainer
-        for a standardized linear model)."""
-        det = self.detector
-        row = [tuple(float(features.get(f, 0.0)) for f in det.feature_names)]
-        df = det.spark.createDataFrame(
-            row, schema=", ".join(f"`{f}` double" for f in det.feature_names)
-        )
-        # run the feature stages only (assembler + scaler), then weight
-        scaled = df
-        for stage in det.model.stages[:-1]:
-            scaled = stage.transform(scaled)
-        vec = scaled.select(
-            vector_to_array(F.col("features")).alias("x")
-        ).collect()[0]["x"]
-        clf = det.model.stages[-1]
-        coefs = list(clf.coefficients)
-        shap = [float(c) * float(x) for c, x in zip(coefs, vec)]
-        return shap, det.feature_names
+        for a standardized linear model), names in the values' order."""
+        return self.detector.explain(features)
 
     def _worker(self) -> None:
         while True:
@@ -203,7 +188,11 @@ class ServingApp:
         return self._httpd.server_address[1]
 
     def stop(self) -> None:
+        """Stop accepting requests, let the worker finish the queued
+        explanations, and wait for the server and worker threads."""
         if self._httpd is not None:
             self._httpd.shutdown()
             self._httpd.server_close()
         self._tasks.put(None)
+        for t in self._threads:
+            t.join()

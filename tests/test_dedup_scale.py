@@ -225,7 +225,7 @@ def test_ivfpq_probe_candidates_scale_linearly(spark):
     )
 
     def probe_cands(base):
-        b = base.withColumn("cell", _coarse_cell(F.col("e")))
+        b = base.withColumn("cell", _coarse_cell("e"))
         qrow = b.filter(F.col("vec_id") == QUERY_VEC_ID).select(
             F.col("cell").alias("qcell")
         )

@@ -51,3 +51,14 @@ def test_constructor_py4j_budget(name, spark, sf_dir):
         f"(ceiling {ceiling}; was {before}) — a Column-object chain has "
         "crept back into a rewritten constructor"
     )
+
+
+def test_coarse_cell_rejects_column_objects(spark):
+    """_coarse_cell composes SQL text; a Column argument would be
+    interpolated as its repr and fail later with a parse error."""
+    from pyspark.sql import functions as F
+
+    from fraud_detection_spark.operators.similarity import _coarse_cell
+
+    with pytest.raises(TypeError, match="SQL text"):
+        _coarse_cell(F.col("e"))
